@@ -10,12 +10,18 @@ over what the engine reports it did:
   one the trigger before ran with);
 * per group, the first arrival of an event time wins while it is
   buffered; later copies are dropped;
-* a flush emits the group's whole buffer, ascending by event time, in
-  one file, and only once the reported watermark has passed the
-  buffer's timer (first buffered event time + grace); the model does
+* a flush emits the group's open epoch, ascending by event time, in
+  one file, in any trigger whose reported watermark has passed the
+  epoch's timer (first buffered event time + grace); the model does
   not require a flush to happen at any particular trigger, so late
   flushing shows as emit lag, not as a wrong answer;
-* after the end-of-input sentinel every buffer has been flushed.
+* a flush in a trigger that also read rows of the group holds the
+  epoch buffered before it plus those rows in arrival order, up to the
+  first fresh one it leaves out, which opens the next epoch with the
+  rest (Kafka Streams punctuates between records, so both "ingest,
+  then flush" and "flush, then ingest" are allowed);
+* after the end-of-input sentinel every buffer has been flushed, but
+  for an epoch that holds the sentinel alone.
 
 Input files map to triggers through the checkpoint's source log, sink
 files through the sink's ``_spark_metadata`` log. The batch check
@@ -129,7 +135,7 @@ class StreamCheck:
 
 def check_stream(rows: pd.DataFrame, wm_used: dict[int, int],
                  out_files: list[tuple[int, pd.DataFrame]], grace_ms: int,
-                 may_remain: frozenset = frozenset(), payload: list[str] = ()) -> StreamCheck:
+                 payload: list[str] = (), sentinel=None) -> StreamCheck:
     """Replay the documented semantics over the engine's own trigger
     boundaries and check every flush the sink received.
 
@@ -139,24 +145,41 @@ def check_stream(rows: pd.DataFrame, wm_used: dict[int, int],
     wm_used: trigger id -> watermark (ms) the trigger reported.
     out_files: (trigger id, sink file rows in file order) with columns
         ``key``, ``ts_us``, ``rid`` and the ``payload`` columns.
-    may_remain: keys whose buffer may still hold rows at the end (the
-        sentinel's own group when it is keyed apart).
+    sentinel: row id of the end-of-input sentinel, which may stay
+        buffered in an epoch of its own.
     """
     rows = rows.reset_index(drop=True)
     n = len(rows)
+    key_v, ts_v, rid_v = rows["key"].values, rows["ts_us"].values, rows["rid"].values
     late = np.zeros(n, bool)
     dedup = np.zeros(n, bool)
     emit_batch = np.full(n, -1, np.int64)
     fire_col = np.full(n, -1, np.int64)
     errors: list[str] = []
-    by_rid = pd.Series(np.arange(n), index=rows["rid"].values)
+    by_rid = pd.Series(np.arange(n), index=rid_v)
     if not by_rid.index.is_unique:
         raise ValueError("input row ids are not unique")
 
-    buffers: dict = {}  # key -> list of row positions
-    buf_ts: dict = {}  # key -> set of buffered ts
+    buffers: dict = {}  # key -> row positions of the open epoch
+    buf_ts: dict = {}  # key -> event times of the open epoch
     fire_at: dict = {}  # key -> timer of the open epoch (ms)
-    armed: dict = {}  # key -> timeout last armed (ms)
+
+    def ingest(g, pos) -> None:
+        buf = buffers.setdefault(g, [])
+        seen = buf_ts.setdefault(g, set())
+        fresh = []
+        for p in pos:
+            t = int(ts_v[p])
+            if t in seen:
+                dedup[p] = True
+            else:
+                seen.add(t)
+                fresh.append(p)
+        if fresh and not buf:
+            fire_at[g] = int(ts_v[fresh].min()) // 1000 + grace_ms
+        buf.extend(fresh)
+        if not buf:
+            del buffers[g], buf_ts[g]
 
     flush_by_batch: dict[int, list[pd.DataFrame]] = {}
     for b, f in out_files:
@@ -177,65 +200,66 @@ def check_stream(rows: pd.DataFrame, wm_used: dict[int, int],
             wm = wm_late
             continue
         idx = rows_by_batch.get(b, np.array([], np.int64))
-        is_late = rows["ts_us"].values[idx] <= wm_late * 1000
+        is_late = ts_v[idx] <= wm_late * 1000
         late[idx[is_late]] = True
         live = idx[~is_late]
-        keys_with_data = set(rows["key"].values[live].tolist())
 
-        seen_in_batch: set = set()
+        flushed: dict = {}
         for f in flush_by_batch.get(b, []):
             for g, part in f.groupby("key", sort=False):
                 flushes += 1
-                where = f"trigger {b} key {g!r}"
-                if g in seen_in_batch:
-                    errors.append(f"{where}: flush split over files")
-                seen_in_batch.add(g)
-                if g in keys_with_data:
-                    errors.append(f"{where}: flushed while it had input")
-                buf = buffers.pop(g, [])
-                buf_ts.pop(g, None)
-                timer = fire_at.pop(g, None)
-                arm = armed.pop(g, None)
-                if not buf:
-                    errors.append(f"{where}: flush with nothing buffered")
+                if g in flushed:
+                    errors.append(f"trigger {b} key {g!r}: flush split over files")
                     continue
-                if not arm < wm:
-                    errors.append(f"{where}: flushed with its timer {arm} not before "
-                                  f"the watermark {wm}")
-                ts = part["ts_us"].to_numpy()
-                if (np.diff(ts) <= 0).any():
-                    errors.append(f"{where}: flush not ascending by event time")
-                got = part["rid"].tolist()
-                if sorted(got) != sorted(rows["rid"].values[buf].tolist()):
-                    errors.append(f"{where}: flush is not the buffer "
-                                  f"({len(got)} rows out, {len(buf)} buffered)")
-                emitted_rids.extend(got)
-                emit_batch[buf] = b
-                fire_col[buf] = timer
+                flushed[g] = part
 
-        for g in dict.fromkeys(rows["key"].values[live].tolist()):
-            pos = live[rows["key"].values[live] == g]
-            buf = buffers.setdefault(g, [])
-            seen = buf_ts.setdefault(g, set())
-            was_empty = not buf
-            fresh = []
-            for p in pos:
-                t = int(rows["ts_us"].values[p])
+        for g in dict.fromkeys(key_v[live].tolist()) | dict.fromkeys(flushed):
+            pos = live[key_v[live] == g]
+            part = flushed.get(g)
+            if part is None:
+                ingest(g, pos)
+                continue
+            # The flush takes the open epoch and this trigger's rows of
+            # the group, in arrival order, up to the first new row it
+            # leaves out; that row and the ones after it open the next
+            # epoch.
+            where = f"trigger {b} key {g!r}"
+            got = part["rid"].tolist()
+            taken = set(got)
+            epoch = buffers.pop(g, [])
+            seen = buf_ts.pop(g, set())
+            timer = fire_at.pop(g, None)
+            split = len(pos)
+            for j, p in enumerate(pos):
+                t = int(ts_v[p])
                 if t in seen:
                     dedup[p] = True
-                else:
+                elif rid_v[p] in taken:
                     seen.add(t)
-                    fresh.append(p)
-            buf.extend(fresh)
-            if was_empty and fresh:
-                fire_at[g] = int(rows["ts_us"].values[fresh].min()) // 1000 + grace_ms
-            if buf:
-                armed[g] = max(fire_at[g], wm + 1)
-            else:
-                del buffers[g], buf_ts[g]
+                    epoch.append(p)
+                else:
+                    split = j
+                    break
+            if not epoch:
+                errors.append(f"{where}: flush with nothing buffered")
+                continue
+            if timer is None:
+                timer = int(ts_v[epoch].min()) // 1000 + grace_ms
+            if not timer < wm:
+                errors.append(f"{where}: flushed before the watermark {wm} "
+                              f"passed its timer {timer}")
+            if (np.diff(part["ts_us"].to_numpy()) <= 0).any():
+                errors.append(f"{where}: flush not ascending by event time")
+            if sorted(got) != sorted(rid_v[epoch].tolist()):
+                errors.append(f"{where}: flush is not the buffer "
+                              f"({len(got)} rows out, {len(epoch)} buffered)")
+            emitted_rids.extend(got)
+            emit_batch[epoch] = b
+            fire_col[epoch] = timer
+            ingest(g, pos[split:])
 
     for g, buf in buffers.items():
-        if g not in may_remain:
+        if rid_v[buf].tolist() != [sentinel]:
             errors.append(f"key {g!r}: {len(buf)} rows never flushed after the sentinel")
         fire_col[buf] = fire_at[g]
 
@@ -259,21 +283,22 @@ def emit_lags(rows: pd.DataFrame, wm_after: dict[int, int], trigger_end: dict[in
     """Per buffered row: seconds from when its flush fell due to when the
     sink committed it.
 
-    A row's flush falls due at the end of the first trigger, no earlier
-    than the one that read it, after which the watermark passed its
-    epoch's timer (``fire_at_ms``). ``wm_after[b]`` is the watermark
-    the engine holds once trigger ``b`` has ended. Rows that fell due
-    but were never emitted count until ``stop_time``; rows that never
-    fell due give no sample.
+    A row's flush falls due at the end of the first trigger after which
+    the watermark passed its epoch's timer (``fire_at_ms``), and no
+    earlier than the start of the trigger that read it (taken as the end
+    of the trigger before). ``wm_after[b]`` is the watermark the engine
+    holds once trigger ``b`` has ended; triggers are numbered without
+    gaps. Rows that fell due but were never emitted count until
+    ``stop_time``; rows that never fell due give no sample.
     """
     bids = np.array(sorted(wm_after), dtype=np.int64)
     wms = np.maximum.accumulate(np.array([wm_after[b] for b in bids], dtype=np.int64))
     ends = np.array([trigger_end[b] for b in bids])
     keep = ~rows["late"].values & ~rows["dedup"].values & (rows["fire_at_ms"].values >= 0)
     r = rows[keep]
-    first = np.searchsorted(bids, r["batch"].values)
+    before = np.searchsorted(bids, r["batch"].values) - 1
     passed = np.searchsorted(wms, r["fire_at_ms"].values, side="right")
-    due_i = np.maximum(first, passed)
+    due_i = np.maximum(before, passed)
     is_due = due_i < len(bids)
     due = np.where(is_due, ends[np.minimum(due_i, len(bids) - 1)], np.nan)
     emitted = r["emit_batch"].values >= 0

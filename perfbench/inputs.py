@@ -7,11 +7,10 @@ program under test only ever sees the files written here.
 * ``write_tables``: catalog-shaped parquet tables (the ten tables of
   ``sources.catalog.TABLES``, same column names and types as the
   catalog documents) for the batch mix.
-* ``keyed_stream``: an ``events`` stream for the keyed re-sequencer,
-  in arrival order, with planted duplicates and stragglers.
 * ``order_stream`` / ``feed``: the ``ElectronicOrder`` feed of the
-  shipped topology; ``python3 perfbench/inputs.py feed ...`` runs it
-  as its own process on a fixed schedule (open loop).
+  shipped topology, in arrival order, with planted duplicates and
+  stragglers; ``python3 perfbench/inputs.py feed ...`` runs it as its
+  own process on a fixed schedule (open loop).
 """
 
 from __future__ import annotations
@@ -27,7 +26,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-GRACE_MS = 10 * 3600 * 1000  # reorder grace of both stream workloads
+GRACE_MS = 10 * 3600 * 1000  # reorder grace of the stream workload
 MAX_DELAY_S = 2 * 3600  # ordinary arrival delay: up to 2 h
 STRAGGLER_DELAY_S = (20 * 3600, 30 * 3600)  # later than grace
 DUP_SHARE = 0.01
@@ -235,29 +234,6 @@ def _plant_dups(seed: int, stream: str, df: pd.DataFrame, rows_per_file: int,
     return pd.concat(out, ignore_index=True)
 
 
-def keyed_stream(seed: int, rows_per_file: int, n_rows: int = 100_000,
-                 n_users: int = 1_500) -> pd.DataFrame:
-    """The sf0.1-sized ``events`` table in arrival order, with planted
-    stragglers and duplicates (column ``kind``). Consecutive blocks of
-    ``rows_per_file`` rows form the stream's files (a duplicate rides
-    in its original's file, so blocks can exceed the nominal size:
-    use ``split_files``)."""
-    ev = make_events(seed, n_rows, n_users)
-    ts = ev["ts"].values.astype("int64")
-    order, strag = _disorder(seed, "keyed", ts, protect=4 * rows_per_file)
-    ev = ev.iloc[order].reset_index(drop=True)
-    ev["kind"] = np.where(strag, "straggler", "row")
-    ev["_file"] = np.arange(len(ev)) // rows_per_file
-
-    def fresh(d, r):
-        d["event_id"] = d["event_id"] + 10_000_000
-        d["value"] = np.round(r.uniform(0.01, 100.0, len(d)), 2)
-        return d
-
-    ev = _plant_dups(seed, "keyed", ev, rows_per_file, fresh)
-    return ev
-
-
 def order_stream(seed: int, rows_per_file: int, n_files: int,
                  row_step_s: float) -> pd.DataFrame:
     """``ElectronicOrder`` rows for ``n_files`` feed files, one order
@@ -325,13 +301,6 @@ def feed(seed: int, out_dir: str, ledger: str, n_files: int, rows_per_file: int,
     with open(ledger + ".tmp", "w") as f:
         json.dump(log, f)
     os.rename(ledger + ".tmp", ledger)
-
-
-def events_schema() -> pa.Schema:
-    return pa.schema([
-        ("event_id", pa.int64()), ("ts", pa.timestamp("us")), ("user_id", pa.int64()),
-        ("event_type", pa.string()), ("value", pa.float64()), ("props", pa.string()),
-    ])
 
 
 def order_schema() -> pa.Schema:

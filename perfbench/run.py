@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""The repository's benchmark: one command, three workloads.
+"""The repository's benchmark: one command, two workloads.
 
     python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>
 
@@ -13,9 +13,6 @@ workload never calls reads 0.
 
 Workloads (see ``BENCHMARK.json`` for why each was chosen):
 
-* ``reorder_keyed``: closed-loop replay of an ``events`` stream through
-  ``streaming.reorder_stream`` keyed by ``user_id`` (``streams.py``;
-  runnable, but not in ``BENCHMARK.json``: see that module);
 * ``reorder_app``: open-loop feed from a separate process into
   ``app.build_topology``, one global order (``streams.py``);
 * ``batch_mix``: registry builders plus a ``noop`` write per query,
@@ -23,13 +20,11 @@ Workloads (see ``BENCHMARK.json`` for why each was chosen):
 
 End-to-end metrics, one definition for every workload:
 
-* ``setup_s``: median of three set-ups in the run. A set-up is
-  ``session.get_spark``, the workload's warm-up and, for streams, the
-  first trigger of a started query. The first set-up runs from process
-  start (interpreter, imports, JVM launch; input generation excluded);
-  the other two repeat it in the running process, so the median is the
-  set-up cost of a warm process and the cold start is reported per
-  layer as ``session.cold_start_s``.
+* ``setup_s``: process start to ready, input generation excluded:
+  interpreter, imports, JVM launch, ``session.get_spark`` and the
+  workload's warm-up, which for the stream is the first trigger of a
+  started query. One set-up per run; its noise is left to the median
+  over runs.
 * ``rows_per_s``: input rows per second. Streams: rows read from the
   start of the measured query to the sink's last commit. Batch: rows
   of the input files each query reads, summed over the mix, divided by
@@ -37,7 +32,9 @@ End-to-end metrics, one definition for every workload:
 * ``step_p50_ms``, ``step_tail_ms``, ``step_geomean_ms``: duration of a
   step, a data-bearing trigger for streams and one query (builder plus
   action) for batch. The tail is the highest percentile with at least
-  ten samples beyond it (the maximum below 21 samples).
+  ten samples beyond it (the maximum below 21 samples). For batch the
+  median and the geometric mean are taken over each query's median
+  time, so a query that runs slow in one pass does not move them.
 * ``emit_lag_p50_s``, ``emit_lag_tail_s``: per output row, the time
   from when its flush fell due to the sink commit that wrote it (see
   ``checks.emit_lags``); for batch, per query result, the time from
@@ -65,12 +62,11 @@ import traceback  # noqa: E402
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 PACKAGE = "kafka_streams_reorder_timestamp_spark"
-WORKLOADS = ("reorder_keyed", "reorder_app", "batch_mix")
+WORKLOADS = ("reorder_app", "batch_mix")
 CORES = 4
 # The package's default driver heap (16 g) is the whole machine here;
 # the benchmark's inputs need a fraction of it.
 DRIVER_MEM = "3g"
-SETUPS = 3
 
 
 def _prepare_env(work: str) -> dict[str, str]:
@@ -115,41 +111,29 @@ class Run:
     def path(self, *parts: str) -> str:
         return os.path.join(self.work, *parts)
 
-    def start_session(self) -> float:
+    def setup(self, warm) -> None:
+        """The run's one set-up, timed from process start with input
+        generation left out; ``warm(run)`` is the workload's warm-up."""
         from kafka_streams_reorder_timestamp_spark.session import get_spark
         from spans import JobCounter
 
-        t = time.time()
-        with self.tracer.span("get_spark", "session"):
-            self.spark = get_spark(app_name="perfbench", extra_conf=self.spark_conf)
-        self.jobs = JobCounter(self.spark, self.trace)
-        if self.trace and self.rss is None:
-            from spans import RssSampler
+        t0 = T_PROCESS + self.gen_s
+        with self.tracer.span("setup", None):
+            t1 = time.time()
+            with self.tracer.span("get_spark", "session"):
+                self.spark = get_spark(app_name="perfbench", extra_conf=self.spark_conf)
+            t2 = time.time()
+            self.jobs = JobCounter(self.spark, self.trace)
+            if self.trace:
+                from spans import RssSampler
 
-            self.rss = RssSampler(self.jvm_pid()).__enter__()
-        return time.time() - t
-
-    def setups(self, warm) -> None:
-        """``SETUPS`` set-ups; ``warm(run)`` is the workload's warm-up.
-        The first is measured from process start, input generation
-        excluded, and launches the JVM; the later ones get the session
-        again and repeat the warm-up in the running process."""
-        total, create, warm_s = [], [], []
-        for i in range(SETUPS):
-            t0 = T_PROCESS + self.gen_s if i == 0 else time.time()
-            with self.tracer.span(f"setup {i}", None):
-                create.append(self.start_session())
-                t1 = time.time()
-                warm(self)
-                warm_s.append(time.time() - t1)
-            total.append(time.time() - t0)
-        from checks import median
-
-        self.setup_s = median(total)
-        self.layers["session.create_s"] = median(create)
-        self.layers["session.cold_start_s"] = total[0]
-        self.layers["session.warm_s"] = median(warm_s)
-        self.extra["setups_s"] = total
+                self.rss = RssSampler(self.jvm_pid()).__enter__()
+            warm(self)
+        t3 = time.time()
+        self.setup_s = t3 - t0
+        self.layers["session.cold_start_s"] = t2 - t0
+        self.layers["session.create_s"] = t2 - t1
+        self.layers["session.warm_s"] = t3 - t2
 
     def close(self) -> None:
         """Stop the session and the JVM, and wait for the JVM to exit."""
@@ -247,8 +231,7 @@ def main(argv: list[str]) -> int:
         import batch
         import streams
 
-        fn = {"reorder_keyed": streams.run_keyed, "reorder_app": streams.run_app,
-              "batch_mix": batch.run_batch}[args.workload]
+        fn = {"reorder_app": streams.run_app, "batch_mix": batch.run_batch}[args.workload]
         res = fn(run)
     finally:
         try:
