@@ -8,8 +8,11 @@ Reproduces the Kafka Streams reorder processor
   timestamp is already buffered is DROPPED (first-writer-wins dedup,
   Application.java:89-93);
 - stream-time punctuation (Application.java:65-69, grace at :144):
-  a timer in the EVENT-TIME domain, here an event-time timeout that
-  fires when the watermark passes `first-buffered-event-time + grace`;
+  a timer in the EVENT-TIME domain at `first-buffered-event-time +
+  grace`. A group that keeps getting input flushes in its data call
+  once the trigger's watermark has passed its timer; an idle group
+  flushes through the event-time timeout (the engine does not time out
+  a group in a trigger that gave it input);
 - ordered flush (Application.java:72-83): on fire, emit the ENTIRE
   buffer sorted ascending by event time and clear it (flush-all, not
   flush-older-than-watermark — SURVEY §2.1 note 4). A straggler that
@@ -121,6 +124,12 @@ def reorder_stream(
     columns = [f.name for f in out_schema.fields]
     grace_ms = _grace_ms(grace)
 
+    def flush(state: GroupState, ts_us, chunks) -> pd.DataFrame:
+        state.remove()
+        return _decode_chunks_sorted(
+            chunks, np.asarray(ts_us, dtype="int64"), columns, field_types
+        )
+
     def handle(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -131,10 +140,7 @@ def reorder_stream(
             # reference's periodic schedule (a periodic fire over an
             # empty store forwards nothing).
             _, ts_us, chunks = state.get
-            state.remove()
-            yield _decode_chunks_sorted(
-                chunks, np.asarray(ts_us, dtype="int64"), columns, field_types
-            )
+            yield flush(state, ts_us, chunks)
             return
 
         exists = state.exists
@@ -161,13 +167,17 @@ def reorder_stream(
             # First buffered record after a flush schedules the next
             # punctuation one grace later in event time.
             fire_at_ms = min(ts_us) // 1000 + grace_ms
+        if fire_at_ms < state.getCurrentWatermarkMs():
+            # The watermark passed the timer before this trigger. A
+            # timer cannot be armed below the watermark, so a group fed
+            # every trigger never times out: it flushes here instead
+            # (ingest, then flush-all, the same drain as the timeout).
+            yield flush(state, ts_us, chunks)
+            return
         state.update((fire_at_ms, ts_us, chunks))
-        # The engine clears timeout info on every invocation, so it is
-        # re-armed here each time; event-time timeouts must be set
-        # strictly later than the current watermark.
-        state.setTimeoutTimestamp(max(fire_at_ms, state.getCurrentWatermarkMs() + 1))
-        return
-        yield  # pragma: no cover — makes `handle` a generator
+        # Timeout info is cleared on every invocation, so the timer is
+        # armed again; here `fire_at_ms` is never below the watermark.
+        state.setTimeoutTimestamp(fire_at_ms)
 
     # A NULL event time cannot be placed on the event-time axis (no
     # watermark comparison, no buffer sort key) — drop the record, the

@@ -22,15 +22,22 @@ def pytest_configure(config):
     )
 
 
+def _names_tests(config) -> bool:
+    """True when the command line names test files or node ids rather
+    than directories."""
+    return any("::" in arg or os.path.isfile(arg) for arg in config.args)
+
+
 def pytest_collection_modifyitems(config, items):
     """Deselect `slow`-marked sweeps by default (see marker doc above).
 
-    An explicit `-m` expression or SPARK_GRAFT_FULL_TESTS=1 restores
-    full control to the invoker; nothing is skipped silently — the
-    deselection shows in pytest's summary line."""
+    An explicit `-m` expression, SPARK_GRAFT_FULL_TESTS=1, or naming
+    test files or node ids on the command line restores full control
+    to the invoker; nothing is skipped silently — the deselection shows
+    in pytest's summary line."""
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return
-    if config.getoption("-m"):
+    if config.getoption("-m") or _names_tests(config):
         return
     selected = []
     deselected = []

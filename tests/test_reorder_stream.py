@@ -12,6 +12,7 @@ pipeInput advancing stream time and firing punctuation synchronously.
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pandas as pd
@@ -37,9 +38,13 @@ def write_input(spark, rows, path, n):
     assert spark.read.parquet(str(path)).count() == n
 
 
-def run_once(spark, in_dir, out_dir, ckpt):
-    src = spark.readStream.schema(STREAM_SCHEMA).parquet(str(in_dir))
-    out = reorder_stream(src, ts_col="event_time", grace="10 hours")
+def run_once(spark, in_dir, out_dir, ckpt, grace="10 hours", key_cols=None,
+             max_files=None):
+    reader = spark.readStream.schema(STREAM_SCHEMA)
+    if max_files:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    src = reader.parquet(str(in_dir))
+    out = reorder_stream(src, ts_col="event_time", grace=grace, key_cols=key_cols)
     q = (
         out.writeStream.format("parquet")
         .option("path", str(out_dir))
@@ -61,6 +66,35 @@ def read_output(out_dir) -> pd.DataFrame:
     if not frames:
         return pd.DataFrame(columns=[f.name for f in STREAM_SCHEMA.fields])
     return pd.concat(frames, ignore_index=True)
+
+
+def batch_of_files(log_dir) -> dict[str, int]:
+    """File name -> id of the micro-batch that logged it, from a
+    streaming metadata log: the sink's `_spark_metadata` or the
+    checkpoint's `sources/0`. Each batch's log file is a version line,
+    then one JSON entry per file."""
+    out = {}
+    for p in glob.glob(f"{log_dir}/*"):
+        batch = os.path.basename(p)
+        if not batch.isdigit():
+            continue
+        with open(p) as f:
+            for line in f.read().splitlines()[1:]:
+                out[os.path.basename(json.loads(line)["path"])] = int(batch)
+    return out
+
+
+def rows_by_batch(data_dir, log_dir) -> pd.DataFrame:
+    """Rows of the parquet files a metadata log lists, each with the id
+    of the batch that logged its file, in batch then file-row order."""
+    frames = [
+        pq.read_table(f"{data_dir}/{name}").to_pandas().assign(batch=b)
+        for name, b in sorted(batch_of_files(log_dir).items(), key=lambda e: e[1])
+    ]
+    return pd.concat(frames, ignore_index=True)
+
+
+HOUR_MS = 3_600_000
 
 
 def test_golden_reorder_stream(spark, tmp_path):
@@ -123,6 +157,80 @@ def test_straggler_lands_in_next_flush(spark, tmp_path):
     got = read_output(out_dir)
     assert len(got) == 14
     assert list(got["order_id"])[12:] == ["0-late", "13"]
+
+
+@pytest.mark.parametrize("key_cols", [None, ["electronic_id"]], ids=["global", "keyed"])
+def test_timer_fires_while_input_keeps_arriving(spark, tmp_path, key_cols):
+    """A group that gets input in every trigger still flushes once the
+    watermark passes `first buffered + grace`: the reference's
+    stream-time punctuation fires between records, not only after the
+    input stops. Three files, each spanning more than the grace per key,
+    one per trigger: the first file's rows must reach the sink in a
+    batch before the one that reads the last file."""
+    in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
+    start = ts("2021-11-04T00:00:00Z")
+    spans = [("A", 2.0), ("B", 0.5), ("A", 0.0), ("B", 3.0), ("A", 3.5), ("B", 1.5)]
+    files = [
+        [
+            (f"{k}-{i}", key, "u", float(i), start + int((4 * k + h) * HOUR_MS))
+            for i, (key, h) in enumerate(spans)
+        ]
+        for k in range(3)
+    ]
+    for k, rows in enumerate(files):
+        write_input(spark, rows, in_dir, len(spans) * (k + 1))
+    run_once(spark, in_dir, out_dir, ckpt, "1 hour", key_cols, max_files=1)
+
+    read = rows_by_batch(in_dir, ckpt / "sources" / "0")
+    read_batch = dict(zip(read["order_id"], read["batch"]))
+    got = rows_by_batch(out_dir, out_dir / "_spark_metadata")
+    emit_batch = dict(zip(got["order_id"], got["batch"]))
+    last_read = max(read_batch[r[0]] for r in files[-1])
+    for order_id, *_ in files[0]:
+        assert emit_batch[order_id] < last_read, (order_id, emit_batch, read_batch)
+
+    # Every row once, each flush ascending by event time within a group.
+    assert sorted(got["order_id"]) == sorted(r[0] for f in files for r in f)
+    group = key_cols or []
+    for _, g in got.groupby(["batch", *group]):
+        assert g["time"].is_monotonic_increasing
+
+
+def test_dedup_at_the_flush_boundary(spark, tmp_path):
+    """First writer wins against the open epoch, also in the trigger
+    that flushes it; once flushed, the buffer is empty again (the
+    reference clears its store at punctuation), so a later copy of a
+    flushed event time is buffered and emitted anew."""
+    in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
+    start = ts("2021-11-04T00:00:00Z")
+
+    def at(h):
+        return start + int(h * HOUR_MS)
+
+    files = [
+        [("a0", at(0)), ("a1", at(2)), ("a2", at(3.5)), ("a3", at(1))],
+        # Watermark 2.5 h: the open epoch's timer (1 h) has passed, so
+        # this trigger flushes; `dup-open` copies a2, still buffered.
+        [("dup-open", at(3.5)), ("b0", at(4)), ("b1", at(7.5)), ("b2", at(5))],
+        # Watermark 6.5 h: `again` copies b1, flushed one trigger ago.
+        [("c0", at(8)), ("again", at(7.5)), ("c1", at(10))],
+    ]
+    n = 0
+    for rows in files:
+        n += len(rows)
+        write_input(spark, [(o, "one", "u", 1.0, t) for o, t in rows], in_dir, n)
+    run_once(spark, in_dir, out_dir, ckpt, "1 hour", max_files=1)
+
+    read = rows_by_batch(in_dir, ckpt / "sources" / "0")
+    read_batch = dict(zip(read["order_id"], read["batch"]))
+    got = rows_by_batch(out_dir, out_dir / "_spark_metadata")
+    flushes = [list(g["order_id"]) for _, g in got.groupby("batch", sort=True)]
+    assert flushes == [
+        ["a0", "a3", "a1", "a2", "b0", "b2", "b1"],
+        ["again", "c0", "c1"],
+    ]
+    # The first flush happened in the trigger that read the second file.
+    assert got.loc[got["order_id"] == "b1", "batch"].item() == read_batch["b1"]
 
 
 def test_checkpoint_restart_exactly_once(spark, tmp_path):
