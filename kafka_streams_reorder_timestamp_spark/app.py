@@ -10,6 +10,16 @@ Differences, deliberate and Spark-idiomatic:
     checkpoint IS the recovery story, so state is never wiped on boot;
   - the topology is a Structured Streaming plan, not a processor DAG.
 
+The topology keeps one global order, so its reorder stage has exactly
+one state group, and it always runs that stage in ONE state partition:
+one stateful task, one RocksDB commit and two Python worker sessions
+per trigger instead of one of each per shuffle partition, all but one
+of them empty. `spark.sql.shuffle.partitions` still sizes batch queries
+and keyed `reorder_stream(key_cols=...)` topologies, which scale out by
+key. A checkpoint keeps the partition count it started with: Spark
+restores it from the offset log, so a checkpoint first written with N
+partitions restarts with N.
+
 Source/sink selection is config-driven so the same `run()` drives a
 real Kafka deployment or a file-based run (tests, containers without
 the Kafka connector): `source.format=kafka|parquet`.
@@ -28,9 +38,32 @@ from .sources import kafka as kafka_io
 from .streaming.reorder import reorder_stream
 
 
+def _topology_session(spark: SparkSession) -> SparkSession:
+    """A new session for the topology, with one state partition.
+
+    It carries over the SQL confs `spark` has that a new session would
+    not (those set at runtime, e.g. by `get_spark` on an existing
+    session); the caller's session itself is left as it was.
+    """
+    topo = spark.newSession()
+    fresh = topo.conf.getAll
+    for k, v in spark.conf.getAll.items():
+        if fresh.get(k) != v and spark.conf.isModifiable(k):
+            topo.conf.set(k, v)
+    topo.conf.set("spark.sql.shuffle.partitions", "1")
+    return topo
+
+
 def build_topology(spark: SparkSession, cfg: EngineConfig, props: dict[str, str]):
     """source → reorder → sink, returning the started StreamingQuery
-    (Application.java:140-147's builder chain)."""
+    (Application.java:140-147's builder chain).
+
+    The query runs in a new session of `spark` with
+    `spark.sql.shuffle.partitions=1`, the one state partition its one
+    global group needs (see the module docstring); it is therefore not
+    listed in `spark.streams`.
+    """
+    spark = _topology_session(spark)
     fmt = props.get("source.format", "kafka")
     if fmt == "kafka":
         src = kafka_io.read_order_stream(

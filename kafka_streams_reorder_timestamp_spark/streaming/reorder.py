@@ -45,7 +45,10 @@ Parallelism: with `key_cols` the order is restored per key group (the
 reference orders per Kafka partition; its demo runs 1 partition). With
 `key_cols=None` a constant grouping key yields one global order at
 parallelism 1 — the same trade-off the reference makes (SURVEY §7.4
-risk 2).
+risk 2). The state store still gets `spark.sql.shuffle.partitions`
+partitions, and each runs a stateful task per trigger although only
+one holds the group; the app's global-order topology
+(`app.build_topology`) therefore runs this case in one state partition.
 """
 
 from __future__ import annotations
@@ -74,18 +77,36 @@ _STATE_SCHEMA = T.StructType(
 )
 
 
+_UNIT_MS = {
+    "millisecond": 1,
+    "second": 1000,
+    "minute": 60_000,
+    "hour": 3_600_000,
+    "day": 86_400_000,
+}
+
+
 def _grace_ms(grace: str) -> int:
-    """Parse '10 hours' / '30 seconds' / '5 minutes' → milliseconds."""
-    qty, _, unit = grace.strip().partition(" ")
-    unit = unit.rstrip("s")
-    factor = {
-        "millisecond": 1,
-        "second": 1000,
-        "minute": 60_000,
-        "hour": 3_600_000,
-        "day": 86_400_000,
-    }[unit]
-    return int(float(qty) * factor)
+    """Parse '10 hours' / '1 HOUR' / '5  minutes' → milliseconds.
+
+    Reads the interval as `withWatermark` does: case-insensitive,
+    singular or plural unit, any whitespace around and between the two
+    parts.
+    """
+    parts = grace.lower().split()
+    if len(parts) != 2:
+        raise ValueError(f"expected '<number> <unit>', got {grace!r}")
+    qty, unit = parts
+    factor = _UNIT_MS.get(unit.removesuffix("s"))
+    if factor is None:
+        raise ValueError(
+            f"unknown unit {unit!r} in {grace!r}; accepted units: "
+            f"{', '.join(_UNIT_MS)} (singular or plural)"
+        )
+    try:
+        return int(float(qty) * factor)
+    except ValueError:
+        raise ValueError(f"expected '<number> <unit>', got {grace!r}") from None
 
 
 def reorder_stream(

@@ -11,13 +11,15 @@ application level.
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_streams_reorder_timestamp_spark.app import run
+from kafka_streams_reorder_timestamp_spark.app import build_topology, run
+from kafka_streams_reorder_timestamp_spark.config import EngineConfig
 from kafka_streams_reorder_timestamp_spark.schemas import ELECTRONIC_ORDER
 from kafka_streams_reorder_timestamp_spark.sources.avro_codec import (
     decode_order,
@@ -32,6 +34,7 @@ from kafka_streams_reorder_timestamp_spark.sources.kafka import (
     write_order_stream,
 )
 from tests.test_reorder_batch import EXPECTED_ORDER_IDS, GOLDEN_INPUT
+from tests.test_reorder_stream import read_output, run_once, write_input
 
 
 def test_avro_binary_spec_bytes():
@@ -77,16 +80,7 @@ def test_kafka_value_roundtrip_spark(spark):
     assert int(one.event_time.timestamp() * 1000) == GOLDEN_INPUT[0][4]
 
 
-def test_app_lifecycle_parquet(spark, tmp_path):
-    """config → build_topology → run with parquet source/sink: the 12
-    golden records come out reordered (Application.main analog)."""
-    in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ck"
-    (
-        spark.createDataFrame(GOLDEN_INPUT, schema=ELECTRONIC_ORDER)
-        .withColumn("event_time", F.timestamp_millis(F.col("time")))
-        .coalesce(1)
-        .write.parquet(str(in_dir))
-    )
+def _write_app_props(tmp_path, in_dir, out_dir, ckpt):
     props = tmp_path / "app.properties"
     props.write_text(
         "\n".join(
@@ -100,11 +94,80 @@ def test_app_lifecycle_parquet(spark, tmp_path):
             ]
         )
     )
-    run(str(props), timeout_sec=300)
-    parts = sorted(glob.glob(f"{out_dir}/part-*.parquet"))
-    out = pd.concat([pd.read_parquet(p) for p in parts], ignore_index=True)
-    out = out[out["order_id"].notna()]
-    assert list(out["order_id"]) == EXPECTED_ORDER_IDS
+    return str(props)
+
+
+def _state_partitions(ckpt) -> list[str]:
+    """Partition directories of the reorder operator's state store."""
+    return sorted(d for d in os.listdir(ckpt / "state" / "0") if d.isdigit())
+
+
+def _offset_log_conf(ckpt) -> dict[str, str]:
+    """Session conf recorded by the latest offset-log entry (a version
+    line, then the batch metadata as JSON)."""
+    batch = max(int(b) for b in os.listdir(ckpt / "offsets") if b.isdigit())
+    lines = (ckpt / "offsets" / str(batch)).read_text().splitlines()
+    return json.loads(lines[1])["conf"]
+
+
+def test_app_lifecycle_parquet(spark, tmp_path):
+    """config → build_topology → run with parquet source/sink: the 12
+    golden records come out reordered (Application.main analog). The
+    one global group runs in one state partition, scoped to the
+    topology: the caller's session keeps its shuffle partitions."""
+    in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ck"
+    write_input(spark, GOLDEN_INPUT, in_dir, 12)
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    run(_write_app_props(tmp_path, in_dir, out_dir, ckpt), timeout_sec=300)
+    assert list(read_output(out_dir)["order_id"]) == EXPECTED_ORDER_IDS
+    assert _state_partitions(ckpt) == ["0"]
+    assert _offset_log_conf(ckpt)["spark.sql.shuffle.partitions"] == "1"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
+
+
+def test_topology_session_keeps_the_callers_runtime_confs(spark, tmp_path):
+    """The topology's own session takes the SQL confs its caller set at
+    runtime (here the state-store codec); only the partition count
+    differs, and the caller's session is left as it was."""
+    in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ck"
+    write_input(spark, GOLDEN_INPUT, in_dir, 12)
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.streaming.stateStore.compression.codec", "zstd")
+    cfg = EngineConfig(checkpoint_dir=str(ckpt))
+    props = {
+        "source.format": "parquet",
+        "source.path": str(in_dir),
+        "sink.path": str(out_dir),
+        "trigger": "available-now",
+    }
+    build_topology(caller, cfg, props).awaitTermination(300)
+    assert list(read_output(out_dir)["order_id"]) == EXPECTED_ORDER_IDS
+    conf = _offset_log_conf(ckpt)
+    assert conf["spark.sql.streaming.stateStore.compression.codec"] == "zstd"
+    assert conf["spark.sql.shuffle.partitions"] == "1"
+    assert caller.conf.get("spark.sql.shuffle.partitions") == spark.conf.get(
+        "spark.sql.shuffle.partitions"
+    )
+
+
+def test_app_restarts_a_multi_partition_checkpoint(spark, tmp_path):
+    """A checkpoint first written with 4 state partitions (what a query
+    started with 4 shuffle partitions leaves) restarts under
+    `build_topology`:
+    Spark restores the partition count from the offset log, the
+    buffered first half survives, and all 12 rows come out in order."""
+    in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ck"
+    wide = spark.newSession()
+    wide.conf.set("spark.sql.shuffle.partitions", "4")
+    write_input(spark, GOLDEN_INPUT[:6], in_dir, 6)
+    run_once(wide, in_dir, out_dir, ckpt)
+    assert _state_partitions(ckpt) == ["0", "1", "2", "3"]
+
+    write_input(spark, GOLDEN_INPUT[6:], in_dir, 12)
+    run(_write_app_props(tmp_path, in_dir, out_dir, ckpt), timeout_sec=300)
+    assert list(read_output(out_dir)["order_id"]) == EXPECTED_ORDER_IDS
+    assert _state_partitions(ckpt) == ["0", "1", "2", "3"]
+    assert _offset_log_conf(ckpt)["spark.sql.shuffle.partitions"] == "4"
 
 
 def test_kafka_gate_reports(spark):

@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 
 from kafka_streams_reorder_timestamp_spark.schemas import ELECTRONIC_ORDER
 from kafka_streams_reorder_timestamp_spark.streaming import reorder_stream
+from kafka_streams_reorder_timestamp_spark.streaming.reorder import _grace_ms
 from tests.test_reorder_batch import EXPECTED_ORDER_IDS, GOLDEN_INPUT, ts
 
 STREAM_SCHEMA = T.StructType(
@@ -517,6 +518,38 @@ def test_all_null_event_time_rows_are_dropped(spark, tmp_path):
     got = read_output(out_dir)
     assert list(got["order_id"]) == EXPECTED_ORDER_IDS
     assert "14-null-ts" not in set(got["order_id"])
+
+
+@pytest.mark.parametrize(
+    "grace, ms",
+    [
+        ("10 hours", 10 * HOUR_MS),
+        ("10 Hours", 10 * HOUR_MS),
+        ("1 HOUR", HOUR_MS),
+        ("10  hours", 10 * HOUR_MS),
+        ("\t30 seconds \n", 30_000),
+        ("1 day", 24 * HOUR_MS),
+        ("250 milliseconds", 250),
+    ],
+)
+def test_grace_spellings(grace, ms):
+    """`reorder.grace` comes from a properties file: it is parsed the
+    way `withWatermark` reads an interval — any case, any whitespace."""
+    assert _grace_ms(grace) == ms
+
+
+@pytest.mark.parametrize(
+    "grace, match",
+    [
+        ("10 fortnights", "accepted units: millisecond, second, minute, hour, day"),
+        ("1 month", "accepted units"),
+        ("ten hours", "expected '<number> <unit>'"),
+        ("10", "expected '<number> <unit>'"),
+    ],
+)
+def test_grace_rejects_bad_intervals(grace, match):
+    with pytest.raises(ValueError, match=match):
+        _grace_ms(grace)
 
 
 def test_reorder_stream_events_table_volume(spark, tmp_path):
