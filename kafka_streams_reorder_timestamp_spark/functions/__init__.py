@@ -14,7 +14,7 @@ from .texthash import (
     word_shingles,
 )
 from .skew import salted_join
-from .vectors import as_double, cosine, dot, l2_norm, vector_lit
+from .vectors import as_double, cosine, dot, l2_norm
 
 __all__ = [
     "as_double",
@@ -27,6 +27,5 @@ __all__ = [
     "normalize_text",
     "salted_join",
     "tokens",
-    "vector_lit",
     "word_shingles",
 ]

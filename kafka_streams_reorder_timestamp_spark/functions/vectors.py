@@ -11,8 +11,6 @@ pipeline inside whole-stage codegen, and never cross into Python.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -23,11 +21,6 @@ def as_double(col: Column | str) -> Column:
     return F.col(col).cast("array<double>") if isinstance(col, str) else col.cast(
         "array<double>"
     )
-
-
-def vector_lit(values: Sequence[float]) -> Column:
-    """A literal query vector (e.g. an ANN probe) as array<double>."""
-    return F.array(*[F.lit(float(v)) for v in values])
 
 
 def dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:

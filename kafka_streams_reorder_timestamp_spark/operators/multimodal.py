@@ -230,50 +230,6 @@ def media_feature_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def resize_media(media: DataFrame, target_bytes: int = 256) -> DataFrame:
-    """Resize payloads to a fixed length by deterministic nearest-
-    neighbor sampling over the byte axis — the 1-D stand-in for image
-    resize (same plumbing: fixed output shape per row, vectorized over
-    the Arrow batch; a real implementation swaps the index arithmetic
-    for pixel interpolation after decode).
-
-    Output schema is fixed-width, which is what downstream feature
-    stacking (np.stack over the batch) requires.
-    """
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("kind", T.StringType(), False),
-            T.StructField("resized", T.BinaryType(), True),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = []
-            for payload in pdf["payload"]:
-                if payload is None or len(payload) == 0:
-                    resized.append(None)
-                    continue
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                idx = np.minimum(
-                    (np.arange(target_bytes) * len(arr)) // target_bytes,
-                    len(arr) - 1,
-                )
-                resized.append(arr[idx].tobytes())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "resized": resized,
-                }
-            )
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        run, schema=schema
-    )
-
-
 @register(
     "media_frame_inventory",
     oracle="""

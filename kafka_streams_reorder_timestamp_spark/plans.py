@@ -231,9 +231,8 @@ def nodes_outside_cache(df: DataFrame, needle: str) -> list[str]:
     distinguishes the fused report from a standalone rollup.)
 
     Implementation (r14): walks the physical-plan TREE via the JVM
-    objects instead of parsing explain() text. The text walk
-    (_nodes_outside_cache_lines below, kept for its documented indent
-    semantics + unit test) breaks on nested EXECUTED caches: an
+    objects instead of parsing explain() text. A text walk over
+    indents breaks on nested EXECUTED caches: an
     InMemoryRelation whose cachedPlan is `AdaptiveSparkPlan
     isFinalPlan=true` (now produced by the classifier's eager tiny-
     table materialization) prints its `== Final/Initial Plan ==`
@@ -265,18 +264,3 @@ def nodes_outside_cache(df: DataFrame, needle: str) -> list[str]:
     walk(df._jdf.queryExecution().executedPlan())
     return out
 
-
-def _nodes_outside_cache_lines(lines: list[str], needle: str) -> list[str]:
-    imts_depths: list[int] = []
-    bad: list[str] = []
-    for ln in lines:
-        if not ln.strip():
-            continue
-        ind = _plan_indent(ln)
-        while imts_depths and ind <= imts_depths[-1]:
-            imts_depths.pop()
-        if needle in ln and not imts_depths:
-            bad.append(ln.strip()[:160])
-        if "InMemoryTableScan" in ln:
-            imts_depths.append(ind)
-    return bad

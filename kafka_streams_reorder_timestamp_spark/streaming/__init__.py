@@ -1,5 +1,4 @@
 from .reorder import reorder_stream
-from .reorder_tws import reorder_stream_tws, tws_available
 from .scoring import export_quality_model, score_doc_stream
 from .stateful import (
     streaming_distinct_hll,
@@ -23,7 +22,6 @@ __all__ = [
     "export_quality_model",
     "interval_join",
     "reorder_stream",
-    "reorder_stream_tws",
     "score_doc_stream",
     "session_agg",
     "sliding_agg",
@@ -35,5 +33,4 @@ __all__ = [
     "streaming_near_dup_candidates",
     "streaming_quantiles_dd",
     "tumbling_agg",
-    "tws_available",
 ]

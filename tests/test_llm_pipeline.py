@@ -291,26 +291,6 @@ def test_sample_frames_slices_payload(spark):
     assert all(len(r.frame) == 64 for r in frames)
 
 
-def test_resize_media_fixed_width(spark):
-    from kafka_streams_reorder_timestamp_spark.operators.multimodal import (
-        resize_media,
-    )
-
-    docs = spark.createDataFrame(
-        [(0, "abcdefgh"), (1, "xy"), (2, "q" * 1000)], ["doc_id", "text"]
-    )
-    out = {
-        r.media_id: r.resized
-        for r in resize_media(synthesize_media(docs), target_bytes=4).collect()
-    }
-    # downsample: nearest-neighbor over the byte axis
-    assert out[0] == b"aceg"
-    # upsample: indices repeat deterministically
-    assert out[1] == b"xxyy"
-    assert out[2] == b"qqqq"
-    assert all(len(v) == 4 for v in out.values())
-
-
 def test_ann_ivf_full_probe_equals_brute_force(spark, sf_dir):
     """With nprobe = number of partitions, IVF must return exactly the
     brute-force answer (graceful degradation contract)."""

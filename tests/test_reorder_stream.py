@@ -302,130 +302,14 @@ def test_keyed_reorder_orders_per_key(spark, tmp_path):
     assert by_key["dev-B"] == ["b2", "b1", "zz2"]
 
 
-def test_golden_reorder_stream_tws(spark, tmp_path):
-    """The transformWithStateInPandas backend passes the same golden
-    topology test (plus duplicate-timestamp drop) as the
-    applyInPandasWithState backend. Skipped where the transformWithState
-    protobuf runtime is unavailable (this container has no
-    google.protobuf; any standard cluster install does)."""
-    import pytest
-
-    from kafka_streams_reorder_timestamp_spark.streaming.reorder_tws import (
-        reorder_stream_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("google.protobuf unavailable — transformWithState runtime cannot load")
-
-    in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
-    dup = ("13-dup", "one", "impostor", 999.0, GOLDEN_INPUT[3][4])
-    write_input(spark, GOLDEN_INPUT + [dup], in_dir, 13)
-    src = spark.readStream.schema(STREAM_SCHEMA).parquet(str(in_dir))
-    out = reorder_stream_tws(src, ts_col="event_time", grace="10 hours")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", str(out_dir))
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = read_output(out_dir)
-    assert list(got["order_id"]) == EXPECTED_ORDER_IDS
-    assert "13-dup" not in set(got["order_id"])
-
-
-def test_tws_processor_logic_unit():
-    """Unit-test the StatefulProcessor against fake state/timers (the
-    protobuf runtime is absent here, so the processor's buffer-insert /
-    dedup / ordered-flush logic is driven directly)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from kafka_streams_reorder_timestamp_spark.streaming.reorder_tws import (
-        _ReorderProcessor,
-    )
-
-    class FakeList:
-        def __init__(self):
-            self.rows = []
-        def get(self):
-            return iter(self.rows)
-        def put(self, rows):
-            self.rows = list(rows)
-        def appendList(self, rows):
-            self.rows.extend(rows)
-        def clear(self):
-            self.rows = []
-
-    class FakeValue:
-        def __init__(self):
-            self.v = None
-        def get(self):
-            return self.v
-        def update(self, v):
-            self.v = v
-        def clear(self):
-            self.v = None
-
-    class FakeHandle:
-        def __init__(self):
-            self.timers = []
-        def getListState(self, name, schema):
-            return FakeList()
-        def getValueState(self, name, schema):
-            return FakeValue()
-        def registerTimer(self, ms):
-            self.timers.append(ms)
-
-    class FakeTimerValues:
-        def getCurrentWatermarkInMs(self):
-            return 0
-
-    cols = ["order_id", "event_time"]
-    types = {"order_id": T.StringType(), "event_time": T.TimestampType()}
-    proc = _ReorderProcessor(cols, ["event_time"], types, "event_time", 3_600_000)
-    handle = FakeHandle()
-    proc.init(handle)
-
-    def pdf(rows):
-        return pd.DataFrame(
-            {"order_id": [r[0] for r in rows],
-             "event_time": pd.to_datetime([r[1] for r in rows], unit="ms")}
-        )
-
-    # batch 1: out-of-order + duplicate ts; nothing emitted, timer set
-    out = list(proc.handleInputRows((0,), iter([pdf(
-        [("b", 2000), ("a", 1000), ("dup", 2000)])]), FakeTimerValues()))
-    assert out == []
-    assert handle.timers == [1000 + 3_600_000]  # min ts (1000 ms) + grace
-    assert len(proc._seen.rows) == 2  # dup dropped
-    assert len(proc._chunks.rows) == 1  # ONE chunk per ingest batch
-
-    # batch 2: another record, timer NOT re-registered
-    list(proc.handleInputRows((0,), iter([pdf([("c", 500)])]), FakeTimerValues()))
-    assert len(handle.timers) == 1
-    assert len(proc._seen.rows) == 3
-    assert len(proc._chunks.rows) == 2
-
-    # timer fires: full buffer drains sorted, state cleared
-    class FakeInfo:
-        def getExpiryTimeInMs(self):
-            return 0
-
-    flushed = list(proc.handleExpiredTimer((0,), FakeTimerValues(), FakeInfo()))
-    assert len(flushed) == 1
-    assert list(flushed[0]["order_id"]) == ["c", "a", "b"]
-    assert proc._seen.rows == [] and proc._chunks.rows == []
-    assert proc._fire.v is None
-
-
 def test_null_payload_columns_survive_flush(spark, tmp_path):
-    """Nullable int / timestamp / double / string payload columns must
-    round-trip the state buffer: a null in a long column must not crash
-    the flush cast, and a NaT in a secondary timestamp column must come
-    back null, not a min-int64 sentinel."""
+    """Nullable int / timestamp / double / string / date / decimal /
+    binary / array / struct / map payload columns must round-trip the
+    state buffer: a null in a long column must not crash the flush
+    cast, a NaT in a secondary timestamp column must come back null,
+    not a min-int64 sentinel, and the types pandas hands over as Python
+    objects (date, Decimal, bytes, ndarray, dict) must come back
+    equal."""
     schema = T.StructType(
         [
             T.StructField("id", T.StringType()),
@@ -434,16 +318,31 @@ def test_null_payload_columns_survive_flush(spark, tmp_path):
             T.StructField("seen_at", T.TimestampType()),
             T.StructField("score", T.DoubleType()),
             T.StructField("note", T.StringType()),
+            T.StructField("day", T.DateType()),
+            T.StructField("price", T.DecimalType(10, 2)),
+            T.StructField("blob", T.BinaryType()),
+            T.StructField("tags", T.ArrayType(T.LongType())),
+            T.StructField(
+                "dims",
+                T.StructType(
+                    [T.StructField("w", T.LongType()), T.StructField("unit", T.StringType())]
+                ),
+            ),
+            T.StructField("attrs", T.MapType(T.StringType(), T.LongType())),
         ]
     )
+    import datetime as _dt
+    from decimal import Decimal
+
     base = ts("2021-11-04T00:00:00Z")
+    day, price, blob, tags = _dt.date(2021, 11, 4), Decimal("12.34"), b"\x00\xff", [3, 1]
+    dims, attrs = (4, "cm"), {"k": 2}
     rows = [
-        ("b", base + 7_200_000, None, None, None, None),
-        ("a", base + 3_600_000, 7, base, 1.5, "x"),
-        ("zz", base + 86_400_000, 1, None, 0.0, "sentinel"),
+        ("b", base + 7_200_000, *[None] * 10),
+        ("a", base + 3_600_000, 7, base, 1.5, "x", day, price, blob, tags, dims, attrs),
+        ("zz", base + 86_400_000, 1, None, 0.0, "sentinel", day, price, blob, [], dims, {}),
     ]
     in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
-    import datetime as _dt
 
     def _to_dt(ms):
         return (
@@ -455,7 +354,7 @@ def test_null_payload_columns_survive_flush(spark, tmp_path):
         )
 
     df = spark.createDataFrame(
-        [(i, _to_dt(t), q, _to_dt(s), sc, n) for i, t, q, s, sc, n in rows],
+        [(i, _to_dt(t), q, _to_dt(s), *rest) for i, t, q, s, *rest in rows],
         schema=schema,
     )
     df.coalesce(1).write.parquet(str(in_dir))
@@ -474,10 +373,14 @@ def test_null_payload_columns_survive_flush(spark, tmp_path):
     assert list(got["id"]) == ["a", "b", "zz"]
     b = got[got["id"] == "b"].iloc[0]
     assert pd.isna(b["qty"]) and pd.isna(b["seen_at"]) and pd.isna(b["score"])
-    assert b["note"] is None or pd.isna(b["note"])
+    for c in ("note", "day", "price", "blob", "tags", "dims", "attrs"):
+        assert b[c] is None or pd.isna(b[c]), c
     a = got[got["id"] == "a"].iloc[0]
     assert a["qty"] == 7 and a["score"] == 1.5 and a["note"] == "x"
     assert pd.Timestamp(a["seen_at"]).value // 1_000_000 == base
+    assert a["day"] == day and a["price"] == price and a["blob"] == blob
+    assert list(a["tags"]) == tags
+    assert a["dims"] == {"w": 4, "unit": "cm"} and dict(a["attrs"]) == attrs
 
 
 def test_empty_stream_terminates_cleanly(spark, tmp_path):
