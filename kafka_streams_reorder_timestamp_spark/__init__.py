@@ -26,4 +26,6 @@ Layout:
     plans          plan-inspection utilities (pushdown/broadcast asserts)
 """
 
+from . import _zipcache  # noqa: F401  (installs the zipimport stamp check)
+
 __version__ = "0.1.0"

@@ -573,7 +573,9 @@ def test_reorder_stream_volume_100k(spark, tmp_path, volume_sf_dir):
         assert dt < 60, f"100k-row reorder took {dt:.1f}s"
 
 
-def test_reorder_keyed_throughput_floor_1m(spark, tmp_path, volume_sf_dir):
+def test_reorder_keyed_throughput_floor_1m(
+    spark, tmp_path, volume_sf_dir, record_property
+):
     """Streaming-throughput regression gate, ON BY DEFAULT since round
     7: the keyed re-sequencer must sustain >= 10k rows/s over 1M rows
     (measured ~40-113k rows/s keyed on local[32] across rounds 5-6,
@@ -625,6 +627,8 @@ def test_reorder_keyed_throughput_floor_1m(spark, tmp_path, volume_sf_dir):
     q.awaitTermination(600)
     dt = time.perf_counter() - t0
     rate = n_in / dt
+    record_property("rows_per_s", rate)
+    print(f"keyed reorder {rate:,.0f} rows/s ({dt:.1f}s)")
     # completeness sanity so a fast-but-wrong run can't pass
     got = read_output(out_dir)
     assert len(got) >= n_in * 0.9
